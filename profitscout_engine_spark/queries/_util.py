@@ -57,6 +57,7 @@ def reset_shared() -> None:
     chain in the query's own deterministic build order."""
     with _SHARED_LOCK:
         _SHARED_VALS.clear()
+        SHARED_BUILD_SECONDS.clear()
         for k in list(_SHARED):
             df = _SHARED.pop(k)
             try:
@@ -66,9 +67,12 @@ def reset_shared() -> None:
 
 
 def _evict_stale(app_id: str) -> None:
-    """Drop (and unpersist) entries from sessions other than the live one,
-    so a long-lived driver process that restarts its SparkSession doesn't
-    accumulate dead plan objects and cache registrations."""
+    """Drop frame entries (unpersisting them) and value entries from
+    sessions other than the live one, so a long-lived driver process that
+    restarts its SparkSession doesn't accumulate dead plan objects and
+    cache registrations."""
+    for k in [k for k in _SHARED_VALS if k[0] != app_id]:
+        _SHARED_VALS.pop(k)
     for k in [k for k in _SHARED if k[0] != app_id]:
         df = _SHARED.pop(k)
         try:
@@ -135,8 +139,7 @@ def shared_value(
     app_id = spark.sparkContext.applicationId
     k = (app_id, sf_dir, key)
     with _SHARED_LOCK:
-        for stale in [sk for sk in _SHARED_VALS if sk[0] != app_id]:
-            _SHARED_VALS.pop(stale)
+        _evict_stale(app_id)
         if k not in _SHARED_VALS:
             _SHARED_VALS[k] = builder()
         return _SHARED_VALS[k]

@@ -2957,27 +2957,17 @@ def stream_dedup_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("b.band_sig").alias("band_sig"),
         # Bounded state key: applyInPandasWithState pays a Python call per
         # GROUP per batch, and per-signature keys mean thousands of tiny
-        # groups each batch. Signatures shard by their first
-        # PSE_STREAM_BUCKET_HEX hex chars (default 2 → 4×256 groups); the
-        # fold is per-SIGNATURE inside the shard, so ANY shard width
-        # computes identical verdict rows — the knob exists because shard
-        # count is the state-size dial at scale (each shard's sig→min map
-        # must stay executor-sized). r11 measured the coarser 1-hex
-        # default HYPOTHESIS (fewer Python group calls) and it LOST —
-        # 13.0 s vs 22.9 s fresh-stream isolate best-of-3 — so the r10
-        # 2-hex sharding stays; state (de)serialization bytes, not group
-        # call count, dominate this stream's per-batch cost.
-        # Validated to 1..8 (ADVICE r11): 0/empty would collapse every
-        # signature into ONE state group with an unbounded sig→min map, a
-        # non-integer would raise at plan build. NOTE the width is part of
-        # the stream's STATE LAYOUT — it must stay fixed for the lifetime
-        # of a checkpointed stream (changing it across restarts re-shards
-        # applyInPandasWithState keys and orphans the existing dedup state).
-        F.substring(
-            F.col("b.band_sig"),
-            1,
-            min(8, max(1, int(_os.environ.get("PSE_STREAM_BUCKET_HEX", "2") or "2"))),
-        ).alias("bucket"),
+        # groups each batch. Signatures shard by their first 2 hex chars
+        # (4×256 groups); the fold is per-SIGNATURE inside the shard, so
+        # any shard width computes identical verdict rows. r11 measured a
+        # coarser 1-hex width (fewer Python group calls) and it LOST —
+        # 13.0 s vs 22.9 s fresh-stream isolate best-of-3 — state
+        # (de)serialization bytes, not group call count, dominate this
+        # stream's per-batch cost. The width is a constant, not a setting:
+        # it is part of the stream's STATE LAYOUT, and changing it across
+        # restarts would re-shard applyInPandasWithState keys and orphan
+        # the checkpointed dedup state.
+        F.substring(F.col("b.band_sig"), 1, 2).alias("bucket"),
     )
 
     def update(

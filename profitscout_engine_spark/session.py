@@ -47,14 +47,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    # A/B experiment hook (round-11 optimization): semicolon-separated
-    # key=value pairs applied LAST, so a measurement run can flip one conf
-    # without editing source. Production-default confs chosen from those
-    # experiments are set explicitly above / in _apply_runtime_confs.
-    for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONFS", "").split(";"):
-        if "=" in kv:
-            k, _, v = kv.partition("=")
-            builder = builder.config(k.strip(), v.strip())
     spark = builder.getOrCreate()
     _apply_runtime_confs(spark)
     return spark

@@ -25,9 +25,13 @@ Provenance map (behavior, not code — reference is /root/reference):
 - S17 idempotency count-guard (overnight_scanner.py:816-827) → :func:`already_ran`
 
 Scale stance: all sinks are path-based Parquet with partition layouts a
-1000-executor writer can produce concurrently; the MERGE rewrite reads
-only the touched partitions when ``partition_col`` is given (partition
-pruning is the difference between rewriting a day and rewriting 100 TB).
+1000-executor writer can produce concurrently. Both MERGE sinks, the
+plain :func:`merge_upsert` and ``txn.merge_upsert_txn``, run one
+:func:`plan_merge`: with ``partition_col`` only the touched partitions
+(NULL included) are read and rewritten, and a key that moves partition
+falls back to a whole-table rewrite. The sinks here are NOT atomic — a
+crash or a concurrent reader can see a partly written table; ``txn``
+adds the snapshot commit.
 """
 
 from __future__ import annotations
@@ -154,40 +158,63 @@ def overwrite_day_partition(df: DataFrame, path: str, partition_col: str) -> Non
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
-def merge_upsert(
-    spark: SparkSession,
-    target_path: str,
+def partition_filter(partition_col: str, touched: list):
+    """NULL-aware membership test: plain ``isin`` never matches NULL, so a
+    touched NULL partition needs an explicit ``isNull`` arm."""
+    non_null = [v for v in touched if v is not None]
+    cond = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
+    if any(v is None for v in touched):
+        cond = cond | F.col(partition_col).isNull()
+    return cond
+
+
+def plan_merge(
+    target: DataFrame,
     source: DataFrame,
     keys: list[str],
     partition_col: str | None = None,
-) -> None:
-    """S11: MERGE ... WHEN MATCHED UPDATE on vanilla Parquet, rewritten as
-    read → left-anti/coalesce join → overwrite.
+) -> tuple[DataFrame, list | None]:
+    """The S11 MERGE decision shared by both sinks (:func:`merge_upsert`
+    and ``txn.merge_upsert_txn``): the merged rows plus which partitions
+    they replace.
 
-    Matched target rows take the source's non-key column values
-    (COALESCE(source, target) per the reference's update list); unmatched
-    target rows pass through; source rows with no target match are
-    inserted (WHEN NOT MATCHED). When ``partition_col`` is given, only
-    partitions containing source keys are read+rewritten (partition
-    pruning — at 100 TB you rewrite the touched days, not the table);
-    the rewrite then goes through the dynamic-overwrite path (S10).
+    Row semantics: full outer join on ``keys``; matched rows take
+    COALESCE(source, target) for non-key columns, unmatched rows on either
+    side pass through (WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT).
+
+    Returns ``(merged, touched)``. ``touched`` is the list of
+    ``partition_col`` values present in ``source``, and ``merged`` then
+    holds exactly the new contents of those partitions — every other
+    partition is left as it is. ``touched`` is ``None`` when the merge
+    must replace the whole table: without ``partition_col``, or when a
+    source key already lives in an untouched partition (the key moves
+    partition, so pruning would keep the old row and insert the new one).
+    That case is found by a key-only semi-join probe of the untouched
+    partitions, skipped when ``partition_col`` is one of the ``keys`` —
+    a key cannot change partition then.
     """
-    target = spark.read.parquet(target_path)
-    if partition_col:
-        days = [r[0] for r in source.select(partition_col).distinct().collect()]
-        target = target.where(F.col(partition_col).isin(days))
+    if partition_col is None:
+        return _merge_rows(target, source, keys), None
+    touched = [r[0] for r in source.select(partition_col).distinct().collect()]
+    part_cond = partition_filter(partition_col, touched)
+    if partition_col not in keys:
+        crossers = (
+            target.where(~F.coalesce(part_cond, F.lit(False)))
+            .select(*keys)
+            .join(source.select(*keys).distinct(), on=keys, how="left_semi")
+        )
+        if crossers.limit(1).count() > 0:
+            return _merge_rows(target, source, keys), None
+    return _merge_rows(target.where(part_cond), source, keys), touched
 
+
+def _merge_rows(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:
     src = source.select(
         *[F.col(k).alias(f"_k_{k}") for k in keys],
-        *[
-            F.col(c).alias(f"_s_{c}")
-            for c in source.columns
-            if c not in keys
-        ],
+        *[F.col(c).alias(f"_s_{c}") for c in source.columns if c not in keys],
     )
     cond = [F.col(k) == F.col(f"_k_{k}") for k in keys]
     joined = target.join(src, on=cond, how="full")
-
     merged_cols = []
     for c in target.columns:
         if c in keys:
@@ -196,13 +223,42 @@ def merge_upsert(
             merged_cols.append(F.coalesce(F.col(f"_s_{c}"), F.col(c)).alias(c))
         else:
             merged_cols.append(F.col(c))
-    merged = joined.select(*merged_cols)
+    return joined.select(*merged_cols)
 
-    if partition_col:
+
+def merge_upsert(
+    spark: SparkSession,
+    target_path: str,
+    source: DataFrame,
+    keys: list[str],
+    partition_col: str | None = None,
+) -> None:
+    """S11: MERGE ... WHEN MATCHED UPDATE on vanilla Parquet, rewritten as
+    read → :func:`plan_merge` → overwrite.
+
+    Row semantics and partition pruning are those of :func:`plan_merge`,
+    shared with the transactional sink. When ``partition_col`` is given
+    and no source key moves partition, only the touched partitions are
+    read and rewritten, through the dynamic-overwrite path (S10);
+    otherwise the whole table is rewritten (hive-partitioned by
+    ``partition_col`` if given), so a partition whose keys all moved out
+    does not survive. Unlike ``txn.merge_upsert_txn`` this sink is NOT
+    atomic: a reader or a crash mid-write can see a partly replaced
+    table.
+    """
+    merged, touched = plan_merge(
+        spark.read.parquet(target_path), source, keys, partition_col
+    )
+    if touched is not None:
         overwrite_day_partition(merged, target_path, partition_col)
-    else:
-        staged = merged.localCheckpoint()  # cut lineage off the path being replaced
-        staged.write.mode("overwrite").parquet(target_path)
+        return
+    staged = merged.localCheckpoint()  # cut lineage off the path being replaced
+    # Static, not the session's dynamic mode: a partition whose keys all
+    # moved out is absent from ``merged`` and must not survive.
+    w = staged.write.mode("overwrite").option("partitionOverwriteMode", "static")
+    if partition_col:
+        w = w.partitionBy(partition_col)
+    w.parquet(target_path)
 
 
 def ctas(spark: SparkSession, sql: str, path: str) -> DataFrame:
@@ -353,13 +409,16 @@ def compact_parquet(
     dominating scans. The file count derives from the table's actual
     on-disk bytes (driver-side directory listing — metadata, not data),
     then one round-robin (or range, when ``order_cols`` given) shuffle
-    rewrites to a staging dir which is atomically swapped in — readers
-    see the old files or the new, never a mix.
+    rewrites to a staging dir which is swapped in by two renames
+    (``path`` → backup, staging → ``path``). Readers never see a mix of
+    old and new files, but the swap is NOT atomic: between the renames
+    ``path`` does not exist, so a reader or a crash there finds no table
+    (the rows survive in the backup dir). ``txn.compact_snapshot`` is the
+    atomic variant.
 
-    The swap uses posix rename, i.e. assumes a local/posix-rename store;
-    on an object store the same protocol runs through the Hadoop
-    FileSystem API (or a lakehouse format's REPLACE), with the listing
-    served by `fs.listFiles`.
+    The renames assume a local/posix-rename store; on an object store the
+    same protocol runs through the Hadoop FileSystem API (or a lakehouse
+    format's REPLACE), with the listing served by `fs.listFiles`.
     """
     import os
     import shutil

@@ -40,6 +40,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .io import partition_filter, plan_merge
+
 _POINTER = "_CURRENT"
 
 # Spark/Hive escape these characters in partition directory names
@@ -68,16 +70,6 @@ def _escape_partition_value(v) -> str:
     if s == "":
         return _HIVE_DEFAULT_PARTITION
     return "".join(f"%{ord(c):02X}" if c in _ESCAPE_CHARS else c for c in s)
-
-
-def _partition_filter(partition_col: str, touched: list):
-    """NULL-aware membership test: plain ``isin`` never matches NULL, so a
-    touched NULL partition needs an explicit ``isNull`` arm."""
-    non_null = [v for v in touched if v is not None]
-    cond = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-    if any(v is None for v in touched):
-        cond = cond | F.col(partition_col).isNull()
-    return cond
 
 
 def _pointer_path(root: str) -> str:
@@ -134,13 +126,24 @@ def commit_snapshot(
             f"table {root!r} is at v{base}, commit was based on v{expected_version}"
         )
     new_v = base + 1
-    final = snapshot_path(root, new_v)
-    staging = f"{final}__staging_{uuid.uuid4().hex[:8]}"
+    staging = _staging_path(root, new_v)
     w = df.write.mode("overwrite")
     if partition_col is not None:
         w = w.partitionBy(partition_col)
     w.parquet(staging)
+    return _publish(root, staging, new_v, expected_version)
 
+
+def _staging_path(root: str, version: int) -> str:
+    return f"{snapshot_path(root, version)}__staging_{uuid.uuid4().hex[:8]}"
+
+
+def _publish(root: str, staging: str, new_v: int, expected_version: int | None) -> int:
+    """Publish a fully staged snapshot dir as version ``new_v``: the one
+    commit tail every write path shares. Raises
+    :class:`ConcurrentCommitError` (staging removed, pointer untouched)
+    if the table moved off ``expected_version``; ``None`` skips the check.
+    """
     # Re-check-and-flip. A true CAS needs a lock/conditional-put; plain
     # POSIX gives us: the pointer flip itself is atomic (os.replace), and
     # the window between this check and the flip is the residual race —
@@ -155,6 +158,7 @@ def commit_snapshot(
     # an orphaned v_{new_v} dir; it was never referenced by the pointer, so
     # it is invisible to readers and safe to clear (otherwise this rename
     # fails ENOTEMPTY and wedges the table).
+    final = snapshot_path(root, new_v)
     if os.path.exists(final):
         shutil.rmtree(final)
     os.rename(staging, final)
@@ -167,26 +171,6 @@ def commit_snapshot(
     return new_v
 
 
-def _merge_frames(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:
-    """The S11 row semantics: full outer join on keys; matched rows take
-    COALESCE(source, target) for non-key columns, unmatched pass through."""
-    src = source.select(
-        *[F.col(k).alias(f"_k_{k}") for k in keys],
-        *[F.col(c).alias(f"_s_{c}") for c in source.columns if c not in keys],
-    )
-    cond = [F.col(k) == F.col(f"_k_{k}") for k in keys]
-    joined = target.join(src, on=cond, how="full")
-    merged_cols = []
-    for c in target.columns:
-        if c in keys:
-            merged_cols.append(F.coalesce(F.col(c), F.col(f"_k_{c}")).alias(c))
-        elif f"_s_{c}" in joined.columns:
-            merged_cols.append(F.coalesce(F.col(f"_s_{c}"), F.col(c)).alias(c))
-        else:
-            merged_cols.append(F.col(c))
-    return joined.select(*merged_cols)
-
-
 def merge_upsert_txn(
     spark: SparkSession,
     root: str,
@@ -194,52 +178,29 @@ def merge_upsert_txn(
     keys: list[str],
     partition_col: str | None = None,
 ) -> int:
-    """S11 MERGE with lakehouse semantics: WHEN MATCHED update non-key
-    columns to COALESCE(source, target), WHEN NOT MATCHED insert — same
-    row semantics as :func:`io.merge_upsert`, but committed as an atomic
-    snapshot: readers see the pre-merge or post-merge table, never the
-    torn middle, and a crash mid-merge changes nothing.
+    """S11 MERGE with lakehouse semantics: the row semantics and partition
+    plan of :func:`io.plan_merge` (shared with :func:`io.merge_upsert`),
+    committed as an atomic snapshot: readers see the pre-merge or
+    post-merge table, never the torn middle, and a crash mid-merge
+    changes nothing.
 
-    Without ``partition_col`` the whole table rewrites into the new
-    snapshot (one full outer join on the keys). WITH ``partition_col``
-    (which must also be the snapshot's hive-partition column) commit
-    cost scales with the TOUCHED data: only partitions containing
-    source keys are read, merged, and rewritten; every untouched
-    partition is HARD-LINKED file-by-file into the new snapshot dir —
-    a metadata operation, no data copied, safe precisely because
-    snapshot files are immutable. This is the 100 TB shape: merging one
-    day into a year-partitioned table stages one day, links the rest.
-
-    Pruning is only sound when a key cannot move between partitions. With
-    ``partition_col`` in ``keys`` that holds by construction. Otherwise a
-    source row could match a target row living in an UNTOUCHED partition
-    (which would be hard-linked through unchanged while the source row
-    inserts — duplicate keys), so this function first probes the
-    untouched partitions for cross-partition key matches (a read-only
-    key-column semi-join, scan pruned to the key columns) and falls back
-    to the full-table merge when any exist.
+    When the plan replaces the whole table (no ``partition_col``, or a
+    source key moved partition) the merge commits as a full snapshot.
+    Otherwise (``partition_col`` must then also be the snapshot's
+    hive-partition column) commit cost scales with the TOUCHED data: only
+    partitions containing source keys are read, merged, and rewritten;
+    every untouched partition is HARD-LINKED file-by-file into the new
+    snapshot dir — a metadata operation, no data copied, safe precisely
+    because snapshot files are immutable. This is the 100 TB shape:
+    merging one day into a year-partitioned table stages one day, links
+    the rest.
     """
     base = current_version(root)
-    target = read_versioned(spark, root)
-    if partition_col is None:
-        return commit_snapshot(_merge_frames(target, source, keys), root, expected_version=base)
-
-    touched = [r[0] for r in source.select(partition_col).distinct().collect()]
-    part_cond = _partition_filter(partition_col, touched)
-    if partition_col not in keys:
-        crossers = (
-            target.where(~F.coalesce(part_cond, F.lit(False)))
-            .select(*keys)
-            .join(source.select(*keys).distinct(), on=keys, how="left_semi")
+    merged, touched = plan_merge(read_versioned(spark, root), source, keys, partition_col)
+    if touched is None:
+        return commit_snapshot(
+            merged, root, expected_version=base, partition_col=partition_col
         )
-        if crossers.limit(1).count() > 0:
-            return commit_snapshot(
-                _merge_frames(target, source, keys),
-                root,
-                expected_version=base,
-                partition_col=partition_col,
-            )
-    merged = _merge_frames(target.where(part_cond), source, keys)
     return _commit_partition_delta(merged, root, base, partition_col, touched)
 
 
@@ -273,7 +234,7 @@ def delete_where_txn(
     touched = [
         r[0] for r in target.where(cond).select(partition_col).distinct().collect()
     ]
-    kept = target.where(_partition_filter(partition_col, touched)).where(keep_cond)
+    kept = target.where(partition_filter(partition_col, touched)).where(keep_cond)
     return _commit_partition_delta(kept, root, base, partition_col, touched)
 
 
@@ -281,11 +242,10 @@ def _commit_partition_delta(
     new_touched: DataFrame, root: str, base: int, partition_col: str, touched: list
 ) -> int:
     """Stage rewritten partitions + hard-link the untouched ones from the
-    base snapshot, then atomically publish — the shared commit path for
+    base snapshot, then atomically publish — the commit path for
     partition-pruned MERGE/DELETE."""
     new_v = base + 1
-    final = snapshot_path(root, new_v)
-    staging = f"{final}__staging_{uuid.uuid4().hex[:8]}"
+    staging = _staging_path(root, new_v)
     # Rewritten (touched) partitions land under their hive dirs.
     new_touched.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
     # Untouched partitions: hard-link every file from the base snapshot.
@@ -308,20 +268,7 @@ def _commit_partition_delta(
         for fname in os.listdir(src_dir):
             if fname.endswith(".parquet"):
                 os.link(os.path.join(src_dir, fname), os.path.join(dst_dir, fname))
-
-    if current_version(root) != base:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise ConcurrentCommitError(f"table {root!r} advanced during staging (expected v{base})")
-    if os.path.exists(final):  # orphan from a crash between rename and flip
-        shutil.rmtree(final)
-    os.rename(staging, final)
-    tmp_ptr = _pointer_path(root) + f".tmp_{uuid.uuid4().hex[:8]}"
-    with open(tmp_ptr, "w") as f:
-        f.write(f"v_{new_v:08d}")
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp_ptr, _pointer_path(root))
-    return new_v
+    return _publish(root, staging, new_v, base)
 
 
 def compact_snapshot(

@@ -4,10 +4,11 @@ regression that OOMed Catalyst), and cross-consumer consistency."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from profitscout_engine_spark.queries import load_registry
-from profitscout_engine_spark.queries._util import shared
+from profitscout_engine_spark.queries import _util, load_registry
+from profitscout_engine_spark.queries._util import shared, shared_value
 
 REGISTRY = load_registry()
 
@@ -49,6 +50,32 @@ def test_shared_heals_after_clear_cache(spark, sf_dir):
     assert df2 is df  # same frame, NOT rebuilt from the (changed) builder
     assert _live(df2)  # re-persisted
     assert df2.count() == 5
+
+
+@pytest.fixture()
+def empty_memos(monkeypatch):
+    """Fresh memo dicts for the test, so resets and evictions here leave
+    the session's real shared frames alone."""
+    for name in ("_SHARED", "_SHARED_VALS", "SHARED_BUILD_SECONDS"):
+        monkeypatch.setattr(_util, name, {})
+
+
+def test_reset_shared_clears_build_seconds(spark, sf_dir, empty_memos):
+    shared(spark, sf_dir, "test_frame_reset", lambda: spark.range(3).select("id"))
+    shared_value(spark, sf_dir, "test_value_reset", lambda: 3)
+    assert "test_frame_reset" in _util.SHARED_BUILD_SECONDS
+    _util.reset_shared()
+    assert _util.SHARED_BUILD_SECONDS == {}
+    assert _util._SHARED == {} and _util._SHARED_VALS == {}
+
+
+def test_stale_session_entries_evicted_from_both_memos(spark, sf_dir, empty_memos):
+    """Either memo's access evicts the other sessions' frames AND values."""
+    _util._SHARED[("dead-app", sf_dir, "f")] = spark.range(1)
+    _util._SHARED_VALS[("dead-app", sf_dir, "v")] = 1
+    assert shared_value(spark, sf_dir, "test_value_live", lambda: 7) == 7
+    assert [k[0] for k in _util._SHARED] == []
+    assert [k[0] for k in _util._SHARED_VALS] == [spark.sparkContext.applicationId]
 
 
 def test_dedup_queries_consistent_after_clear_cache(spark, sf_dir):

@@ -1,6 +1,6 @@
 """Transactional version-pointer tables (sources/txn.py): atomic publish,
 snapshot isolation, time travel, optimistic concurrency, crash safety,
-and MERGE parity with the non-transactional S11 rewrite."""
+and MERGE row semantics shared with the non-transactional S11 rewrite."""
 
 from __future__ import annotations
 
@@ -72,9 +72,10 @@ def test_merge_txn_matches_plain_merge(spark, root, tmp_path):
     v = txn.merge_upsert_txn(spark, root, source, keys=["k"])
     got = {(r["k"], r["val"], r["qty"]) for r in txn.read_versioned(spark, root).collect()}
     assert v == 2
+    # Matched k=2 took the source val but kept the target qty (COALESCE
+    # semantics); k=4 inserted; k=1 and k=3 passed through.
+    assert want == {(1, "a", 10), (2, "B!", 20), (3, "c", 30), (4, "d", 40)}
     assert got == want
-    # Matched row took source val but kept target qty (COALESCE semantics).
-    assert (2, "B!", 20) in got and (4, "d", 40) in got
     # Pre-merge snapshot still intact (time travel).
     assert len(txn.read_versioned(spark, root, version=1).collect()) == 3
 
@@ -217,23 +218,80 @@ def test_delete_null_partition_value(spark, root):
     assert got == [(2, None), (3, "d2")]
 
 
-def test_merge_cross_partition_key_move_no_duplicates(spark, root):
+def _partitioned_merge(spark, sink, path, base, source, keys):
+    """Write ``base`` partitioned by day, MERGE ``source`` into it through
+    the plain (``io``) or transactional (``txn``) sink, and return every
+    row as (k, day, val), duplicates kept, in a stable order."""
+    if sink == "io":
+        base.write.partitionBy("day").parquet(path)
+        io.merge_upsert(spark, path, source, keys=keys, partition_col="day")
+        out = spark.read.parquet(path)
+    else:
+        txn.commit_snapshot(base, path, partition_col="day")
+        txn.merge_upsert_txn(spark, path, source, keys=keys, partition_col="day")
+        out = txn.read_versioned(spark, path)
+    return sorted(((r["k"], r["day"], r["val"]) for r in out.collect()), key=repr)
+
+
+@pytest.mark.parametrize("sink", ["io", "txn"])
+def test_merge_cross_partition_key_move_no_duplicates(spark, root, sink):
     """A source key that exists in the target under a DIFFERENT partition
-    value: pruning alone would link the old row through and insert the new
-    one (duplicate keys). The cross-partition probe must detect it and
-    fall back to the full merge."""
+    value: pruning alone would keep the old row and insert the new one
+    (duplicate keys). The cross-partition probe must detect it and fall
+    back to the full merge, which also drops the partition (d2) whose
+    only key moved out."""
     base = spark.createDataFrame(
         [(1, "d1", "a"), (3, "d2", "c")], "k int, day string, val string"
     )
-    txn.commit_snapshot(base, root, partition_col="day")
     source = spark.createDataFrame([(3, "d3", "moved")], "k int, day string, val string")
-    txn.merge_upsert_txn(spark, root, source, keys=["k"], partition_col="day")
-    rows = txn.read_versioned(spark, root).collect()
-    assert sorted(r["k"] for r in rows) == [1, 3]
-    assert {(r["k"], r["day"], r["val"]) for r in rows} == {
-        (1, "d1", "a"),
-        (3, "d3", "moved"),
-    }
+    got = _partitioned_merge(spark, sink, root, base, source, ["k"])
+    assert got == [(1, "d1", "a"), (3, "d3", "moved")]
+
+
+@pytest.mark.parametrize("sink", ["io", "txn"])
+def test_merge_into_null_partition_keeps_its_rows(spark, root, sink):
+    """A source row in the NULL partition rewrites that partition (plain
+    ``isin`` never matches NULL): its unmatched rows must survive."""
+    base = spark.createDataFrame(
+        [(1, "d1", "a"), (2, None, "b"), (3, None, "c")], "k int, day string, val string"
+    )
+    source = spark.createDataFrame([(2, None, "B!")], "k int, day string, val string")
+    got = _partitioned_merge(spark, sink, root, base, source, ["k"])
+    assert got == [(1, "d1", "a"), (2, None, "B!"), (3, None, "c")]
+
+
+@pytest.mark.parametrize("op", ["merge", "delete"])
+def test_partition_delta_conflict_publishes_nothing(spark, root, monkeypatch, op):
+    """A partition-pruned write whose table advances while it stages must
+    raise, clear its staging dir, and leave the other writer's pointer
+    and snapshot as they were."""
+    schema = "k int, day string, val string"
+    txn.commit_snapshot(
+        spark.createDataFrame([(1, "d1", "a"), (2, "d2", "b")], schema),
+        root,
+        partition_col="day",
+    )
+    rival = [(7, "d7", "rival")]
+    escape = txn._escape_partition_value
+
+    def escape_during_race(v):
+        # Runs after the touched partitions are staged, before the publish.
+        if txn.current_version(root) == 1:
+            txn.commit_snapshot(spark.createDataFrame(rival, schema), root, partition_col="day")
+        return escape(v)
+
+    monkeypatch.setattr(txn, "_escape_partition_value", escape_during_race)
+    with pytest.raises(txn.ConcurrentCommitError):
+        if op == "merge":
+            source = spark.createDataFrame([(2, "d2", "B!")], schema)
+            txn.merge_upsert_txn(spark, root, source, keys=["k", "day"], partition_col="day")
+        else:
+            txn.delete_where_txn(spark, root, "val = 'b'", partition_col="day")
+    with open(os.path.join(root, "_CURRENT")) as f:
+        assert f.read() == "v_00000002"
+    assert not [d for d in os.listdir(root) if "__staging" in d]
+    got = [(r["k"], r["day"], r["val"]) for r in txn.read_versioned(spark, root).collect()]
+    assert got == rival
 
 
 def test_merge_pruned_when_partition_in_keys(spark, root):
